@@ -38,7 +38,6 @@ Design notes (scale + correctness):
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
@@ -1406,7 +1405,6 @@ def _mbv_templates(spec: MergeSpec, schema, all_trusted: bool = False) -> dict:
         spec.trusted,
         spec.tombstone,
         all_trusted,
-        os.environ.get("EMAP_SEED_COLLAPSE", "1") != "0",
         tuple((f.name, f.dataType.simpleString()) for f in schema.fields),
     )
     t = _MBV_CACHE.get(ck)
@@ -1509,13 +1507,7 @@ def _mbv_templates(spec: MergeSpec, schema, all_trusted: bool = False) -> dict:
             return F.col(g).isNotNull()
         return F.col(f"__ts_{g}").isNotNull()
 
-    # safety valve for the seed collapse/merge optimizations (A/B'd in
-    # r6; default on — differential suites cover both shapes)
-    _collapse_on = os.environ.get("EMAP_SEED_COLLAPSE", "1") != "0"
-
     def _collapses(g: str) -> Column:
-        if not _collapse_on:
-            return F.lit(False)
         return _present(g) & ~F.col("is_deleted") & (_ts_pos(g) == anchor_t)
 
     # Same-time seed MERGING: tracked fields last written at the same
@@ -1533,8 +1525,6 @@ def _mbv_templates(spec: MergeSpec, schema, all_trusted: bool = False) -> dict:
     def _is_emitter(g: str) -> Column:
         """No earlier present tracked field shares g's position."""
         cond = F.lit(True)
-        if not _collapse_on:
-            return cond
         for f in tracked:
             if f == g:
                 break
@@ -1557,8 +1547,7 @@ def _mbv_templates(spec: MergeSpec, schema, all_trusted: bool = False) -> dict:
                     cols.append(F.lit(None).cast(schema[g].dataType).alias(g))
                 continue
             rides = (
-                _collapse_on
-                and not is_anchor
+                not is_anchor
                 and g != which
                 and g in tracked
                 and which in tracked
@@ -1698,9 +1687,12 @@ def _mbv_templates(spec: MergeSpec, schema, all_trusted: bool = False) -> dict:
             # collapsed pseudo seeds (last-write at the anchor position)
             # ride on the anchor, same-time riders ride the first
             # emitter in spec order — emit nothing for either here
-            cond = present & ~F.col("is_deleted")
-            if _collapse_on:
-                cond = cond & (_ts_pos(which) < anchor_t) & _is_emitter(which)
+            cond = (
+                present
+                & ~F.col("is_deleted")
+                & (_ts_pos(which) < anchor_t)
+                & _is_emitter(which)
+            )
             struct = F.when(cond, struct)
         return struct
 
@@ -1861,7 +1853,6 @@ def _mbv_templates(spec: MergeSpec, schema, all_trusted: bool = False) -> dict:
     t = {
         "tomb": tomb,
         "upd_cols": upd_cols,
-        "seed_structs": seed_structs,
         # ONE generator expression replaces the r9 explode -> filter
         # isNotNull -> select("__s.*") chain: array_compact drops the
         # null (conditionally absent) seed structs and inline expands the

@@ -104,7 +104,7 @@ def _load_all() -> None:
 # q121 (PII scrub & redact), q122 (Gopher-style repetition filters),
 # q123 (sequence packing) — enter for their first hard driver check.
 # Out: q105 (JDBC mirror — driver-green r4/r5, K2 also pinned by the
-# delta/fused-commit/durable-pipeline suites), q106 (LSH parameter
+# delta-store/durable-pipeline suites), q106 (LSH parameter
 # sweep — a parameter variation of driver-resident q57/q112/q113
 # banding) and q59 (embedding-cosine near-dup — driver-green r4/r5;
 # the embedding family keeps driver q58/q114/q115 and local q120).

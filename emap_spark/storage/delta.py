@@ -60,7 +60,6 @@ import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.types import (
-    LongType,
     StructField,
     StructType,
     _parse_datatype_json_string,
@@ -141,7 +140,20 @@ class DeltaLog:
         p = self._manifest_path()
         if os.path.isfile(p):
             with open(p) as fh:
-                self._manifest = json.load(fh)
+                man = json.load(fh)
+            if man.get("delta_paths"):
+                # the retired fused multi-table commit registered deltas
+                # under a shared _fused/ dir; this build reads only
+                # delta/batch=N, so serving the log would make has_batch
+                # report batches whose rows every read silently misses
+                raise RuntimeError(
+                    f"{p}: manifest uses the retired fused-commit format "
+                    f"(delta_paths for batches {sorted(man['delta_paths'])}); "
+                    f"this engine reads only per-table deltas — rebuild the "
+                    f"table by replaying its batches, or compact it with the "
+                    f"build that wrote it"
+                )
+            self._manifest = man
             self.n_buckets = self._manifest.get("n_buckets", 0)
             # upgrade guard (ADVICE r9): a manifest written before type
             # tracking may hold live files whose physical types were
@@ -232,12 +244,7 @@ class DeltaLog:
 
     # -- paths -------------------------------------------------------------
     def _delta_path(self, batch_id: int) -> str:
-        # fused multi-table commits register an EXTERNAL delta dir (the
-        # table's partition of the shared fused file) in the manifest
-        override = self._manifest.get("delta_paths", {}) if self._manifest else {}
-        return override.get(str(batch_id)) or os.path.join(
-            self.root, f"delta/batch={batch_id}"
-        )
+        return os.path.join(self.root, f"delta/batch={batch_id}")
 
     def _base_path(self, v: int) -> str:
         return os.path.join(self.root, f"base/v={v}")
@@ -280,17 +287,13 @@ class DeltaLog:
         # footer-merge JOB plus driver-side schema resolution per table
         # per batch (~35-40 ms stage + ~60-100 ms driver on the profiled
         # 20k ADT batch, x3 tables), pure fixed cost on the ingest path.
-        # Files missing a column yield nulls, exactly as mergeSchema did;
-        # files carrying extra columns (fused superset deltas) are never
-        # read beyond the projection. Legacy manifests without types fall
-        # through to the original mergeSchema read.
+        # Files missing a column (written before a schema-evolution
+        # append) yield nulls, exactly as mergeSchema did. Manifests
+        # without full types (pre-type tables, a tombstoned conflict)
+        # fall through to the mergeSchema read.
         cols = self._manifest.get("columns")
         types = self._manifest.get("types") or {}
-        if (
-            cols
-            and self._manifest.get("types_full")
-            and os.environ.get("EMAP_DELTA_SCHEMA") != "legacy"
-        ):
+        if cols and self._manifest.get("types_full"):
             want = list(cols) + [c for c in (META_V,) if c not in cols]
             if all(types.get(c) for c in want):
                 st = StructType(
@@ -304,17 +307,13 @@ class DeltaLog:
                 # (pre-bucketing batch roots)
                 return self.spark.read.schema(st).parquet(*paths).select(*want)
         df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        # fused delta files carry the SUPERSET of the fused tables'
-        # columns (the other tables' columns are all-null and, being
-        # columnar, cost ~nothing on disk and are never scanned after
-        # this projection); the manifest records THIS table's columns so
-        # the read surface stays exactly the table schema. A manifest
-        # column absent from every live file is null-filled with its
-        # recorded type — the same surface the explicit-schema fast path
-        # produces, so flipping EMAP_DELTA_SCHEMA (or a tombstone) never
-        # changes read_current's schema (ADVICE r9). Only a column that
-        # is both absent from all files AND untyped (legacy manifest) is
-        # dropped, as before — its type is unknowable.
+        # project back to the manifest's column list so the fallback's
+        # surface is the fast path's: a manifest column absent from every
+        # live file is null-filled with its recorded type, so a tombstone
+        # or a pre-type manifest never changes read_current's schema
+        # (ADVICE r9). Only a column that is both absent from all files
+        # AND untyped (legacy manifest) is dropped — its type is
+        # unknowable.
         if cols:
             sel = [
                 F.col(c)
@@ -455,11 +454,7 @@ class DeltaLog:
             return 0
         path = self._delta_path(batch_id)
         versioned = combined.withColumn(META_V, F.lit(batch_id).cast("long"))
-        legacy = os.environ.get("EMAP_DELTA_WRITE") == "legacy"  # A/B knob
-        skip_exchange = (
-            not legacy and n_parts is not None
-            and n_parts <= 4 * self.n_delta_files
-        )
+        skip_exchange = n_parts is not None and n_parts <= 4 * self.n_delta_files
         if not skip_exchange:
             versioned = versioned.repartition(self.n_delta_files)
         versioned.write.mode("overwrite").parquet(path)
@@ -490,25 +485,6 @@ class DeltaLog:
         self._merge_types(versioned.schema)
         return actions + self._register(batch_id, combined.columns)
 
-    def commit_external(
-        self,
-        batch_id: int,
-        path: str,
-        columns: list[str],
-        types_schema: StructType | None = None,
-    ) -> int:
-        """Register an ALREADY-WRITTEN delta dir (this table's partition
-        of a fused multi-table file — see commit_fused) in the
-        transaction log; returns extra Spark actions spent (1 when the
-        registration triggered a compaction, else 0 — the fused write
-        itself was the caller's single action)."""
-        if self.has_batch(batch_id):
-            return 0
-        self._manifest.setdefault("delta_paths", {})[str(batch_id)] = path
-        if types_schema is not None:
-            self._merge_types(types_schema)
-        return self._register(batch_id, columns)
-
     def _merge_types(self, schema: StructType) -> None:
         """Record each written column's exact dataType in the manifest so
         _read_live can skip footer-merge schema inference. A column whose
@@ -528,9 +504,9 @@ class DeltaLog:
 
     def _register(self, batch_id: int, columns: list[str]) -> int:
         """Append a written delta to the log (atomic manifest rename) and
-        compact when due. Also records the table's column list so reads
-        of fused (superset-schema) delta files project back to exactly
-        the table schema; new columns append (schema evolution)."""
+        compact when due. Also records the table's column list — new
+        columns append (schema evolution) — which the mergeSchema
+        fallback read projects back to."""
         cols = self._manifest.get("columns") or []
         cols = cols + [c for c in columns if c not in cols]
         self._manifest["columns"] = cols
@@ -541,11 +517,6 @@ class DeltaLog:
             self._compact()
             return 1
         return 0
-
-    def fused_root(self) -> str:
-        """Shared parent dir for fused multi-table delta files (sibling
-        of the per-table roots)."""
-        return os.path.join(os.path.dirname(self.root), "_fused")
 
     def _compact(self) -> None:
         """Fold live files into one base (current + all audit rows) so
@@ -598,100 +569,6 @@ class DeltaLog:
         for p in old_paths:
             if p != base:
                 shutil.rmtree(p, ignore_errors=True)
-                # a fused delta lives as one partition of a shared
-                # batch dir — remove the parent once every table's
-                # partition is compacted away and only write markers
-                # (_SUCCESS etc.) remain (concurrent table compactions
-                # can race on the same parent: best-effort)
-                parent = os.path.dirname(p)
-                try:
-                    if os.path.basename(parent).startswith("batch=") and not any(
-                        e.lstrip(".").startswith("__tbl=")
-                        or not e.lstrip(".").startswith("_")
-                        for e in os.listdir(parent)
-                    ):
-                        shutil.rmtree(parent, ignore_errors=True)
-                except OSError:
-                    pass
-
-
-def commit_fused(
-    batch_id: int, parts: dict[str, tuple["DeltaLog", DataFrame]]
-) -> int:
-    """Commit SEVERAL tables' combined frames for one batch in ONE Spark
-    job (VERDICT r4 #1): the reference commits all of a message's tables
-    in a single transaction (core/.../App.java:92-101); the Spark
-    analogue is one action per batch, not one per table.
-
-    The frames union on the SUPERSET of their columns (missing columns
-    null — columnar files store and scan them for ~free) plus a __tbl
-    discriminator, one partitioned write lands every table's rows under
-    its own leaf dir, and each table's transaction log then registers
-    its partition via commit_external. Independent sub-plans of one job
-    run as concurrent stages, so the fold parallelism of the per-table
-    design is kept while 3 write jobs (driver scheduling, output
-    commits) collapse into 1.
-
-    Falls back to per-table commits when the frames' schemas conflict
-    (same column name, different type — cannot union) or fewer than two
-    tables still need the batch (crash-replay can leave a subset).
-    Returns Spark actions spent."""
-    pending = {
-        n: (log, df) for n, (log, df) in parts.items() if not log.has_batch(batch_id)
-    }
-    if not pending:
-        return 0
-    if len(pending) == 1:
-        ((log, df),) = pending.values()
-        return log.commit(batch_id, df)
-    logs = [log for log, _ in pending.values()]
-    fused_root = logs[0].fused_root()
-    types: dict[str, object] = {}
-    conflict = any(l.fused_root() != fused_root for l in logs)
-    for _, df in pending.values():
-        for f in df.schema.fields:
-            if types.setdefault(f.name, f.dataType) != f.dataType:
-                conflict = True
-    if conflict:  # per-table fallback: correctness over fusion
-        return sum(log.commit(batch_id, df) for log, df in pending.values())
-
-    all_cols = list(types)
-    fused = None
-    for name, (_, df) in pending.items():
-        part = df.select(
-            F.lit(name).alias("__tbl"),
-            *[
-                F.col(c) if c in df.columns else F.lit(None).cast(types[c]).alias(c)
-                for c in all_cols
-            ],
-        ).withColumn(META_V, F.lit(batch_id).cast("long"))
-        fused = part if fused is None else fused.unionByName(part)
-
-    # a FRESH attempt dir per write: a crash after the write but before
-    # every manifest registered must never overwrite (and so destroy)
-    # the partitions of tables that DID register — replay writes the
-    # still-pending tables to the next attempt dir and the orphaned
-    # previous attempt is dead weight until compaction removes its
-    # registered siblings
-    attempt, path = 0, os.path.join(fused_root, f"batch={batch_id}")
-    while os.path.exists(path):
-        attempt += 1
-        path = os.path.join(fused_root, f"batch={batch_id}.r{attempt}")
-    # same re-narrowing rationale as DeltaLog.commit: O(touched) rows,
-    # a handful of round-robin tasks each writing every table's leaf dir
-    fused.repartition(4).write.mode("overwrite").partitionBy("__tbl").parquet(path)
-    actions = 1
-    for name, (log, df) in pending.items():
-        # the fused file's physical types for THIS table's columns are
-        # the union's (conflict-free by the check above) plus __v long
-        part_schema = StructType(
-            [StructField(c, types[c], True) for c in df.columns]
-            + [StructField(META_V, LongType(), True)]
-        )
-        actions += log.commit_external(
-            batch_id, os.path.join(path, f"__tbl={name}"), df.columns, part_schema
-        )
-    return actions
 
 
 class SnapshotStore:

@@ -59,6 +59,24 @@ from emap_spark.operators.merge import (
 )
 from emap_spark.storage import DeltaLog, JdbcUpsertStore, SnapshotStore
 
+# EMAP_BATCH_AQE=auto keeps AQE on for batches of at least this many
+# deduped rows per core — the measured flip point (see process_batch).
+# The row count it is compared with is an HLL estimate unless
+# EMAP_STAGE_DEDUP=exact.
+AQE_ROWS_PER_CORE = 80_000
+
+
+def fold_rows_per_task() -> int:
+    """EMAP_FOLD_ROWS_PER_TASK (merge-fold rows per task, 0 = all cores),
+    degrading to the default 2500 on an empty, malformed or negative
+    value — a typo in an ops knob must not fail every batch."""
+    try:
+        rpt = int(os.environ.get("EMAP_FOLD_ROWS_PER_TASK", "2500"))
+    except ValueError:
+        rpt = -1
+    return rpt if rpt >= 0 else 2500
+
+
 # deterministic, monotonic stored_from: base + batch_id seconds (audit
 # bitemporal queries need stored_from non-decreasing in batch order)
 _STORED_BASE = datetime.datetime(2024, 6, 1)
@@ -304,7 +322,7 @@ class MergePipeline:
         so the exchange-skip decision always sees the true partition
         count."""
         dp = df.sparkSession.sparkContext.defaultParallelism
-        rpt = int(os.environ.get("EMAP_FOLD_ROWS_PER_TASK", "2500"))
+        rpt = fold_rows_per_task()
         return min(dp, max(4, self._batch_rows // rpt)) if rpt > 0 else dp
 
     def _merge_one_table(self, name: str, deduped: DataFrame, batch_id: int, stored: str) -> int:
@@ -334,16 +352,6 @@ class MergePipeline:
         state.current = cur
         state.audit_parts.append(aud)
         return 1
-
-    def _prepare_fused_part(
-        self, name: str, deduped: DataFrame, batch_id: int, stored: str
-    ):
-        """Fused-commit prep for one table: (store, combined plan), or
-        None when the table already committed the batch (crash replay)."""
-        state = self.tables[name]
-        if state.store.has_batch(batch_id):
-            return None
-        return state.store, self._build_merge(name, deduped, stored).combined
 
     def process_batch(
         self,
@@ -412,14 +420,13 @@ class MergePipeline:
         # measured loser), and is restored to the session's value for the
         # merge window of LARGE batches, where runtime re-planning (skew
         # splitting, coalescing) is what a cluster-scale deployment
-        # needs. The threshold derives from the same inputs as
-        # _fold_parallelism: EMAP_BATCH_AQE_FACTOR (default 32) x
-        # EMAP_FOLD_ROWS_PER_TASK (default 2500) x defaultParallelism —
-        # 2.56M rows (80k rows/core) on local[32] — or an explicit
-        # EMAP_BATCH_AQE_ROWS. The factor default sits at the MEASURED
-        # flip point (tools/ab_adt_big.py, interleaved fresh-engine
-        # pairs, uniform synthetic ADT): AQE-off wins 3/3 pairs at 1M
-        # rows (min 3.88 vs 5.19 s) and 2/2 at 2M (13.6 vs 18.2);
+        # needs. The threshold is AQE_ROWS_PER_CORE x defaultParallelism
+        # (2.56M rows on local[32]), compared against n_deduped — an HLL
+        # estimate in the default staging mode (see the comparison in
+        # _process_batch_inner). 80k rows/core is the MEASURED flip
+        # point (interleaved fresh-engine pairs, uniform synthetic ADT):
+        # AQE-off wins 3/3 pairs at 1M rows (min 3.88 vs 5.19 s) and 2/2
+        # at 2M (13.6 vs 18.2);
         # AQE-on wins 2/2 at 4M (10.02 vs 10.54) — the job-wave fixed
         # cost amortizes somewhere in (2M, 4M) rows on 32 cores, and
         # above it runtime re-planning is free insurance against the
@@ -439,13 +446,8 @@ class MergePipeline:
                 old_aqe = "true"
             spark.conf.set(aqe_key, "false")
             if mode == "auto":
-                rpt = int(os.environ.get("EMAP_FOLD_ROWS_PER_TASK", "2500")) or 2500
-                factor = int(os.environ.get("EMAP_BATCH_AQE_FACTOR", "32"))
-                self._aqe_restore_at = int(
-                    os.environ.get(
-                        "EMAP_BATCH_AQE_ROWS",
-                        factor * rpt * spark.sparkContext.defaultParallelism,
-                    )
+                self._aqe_restore_at = (
+                    AQE_ROWS_PER_CORE * spark.sparkContext.defaultParallelism
                 )
                 self._aqe_session_value = old_aqe
         try:
@@ -563,14 +565,10 @@ class MergePipeline:
         # sizes. On a cluster the persisted batch lives in executor
         # memory/disk instead of a distributed-FS round trip; the
         # quarantine write and all three merges consume the cache and
-        # it is dropped at batch end. EMAP_STAGE_CUT=parquet restores
-        # the durable-file staging for memory-constrained deployments.
-        if os.environ.get("EMAP_STAGE_CUT", "persist") == "persist":
-            staged = staged.persist()
-            staged.count()  # materializes -> observations fire
-            self._staged_cache = staged  # unpersisted at batch end
-        else:
-            staged = cut(staged)  # materializes -> observations fire; cuts lineage
+        # it is dropped at batch end.
+        staged = staged.persist()
+        staged.count()  # materializes -> observations fire
+        self._staged_cache = staged  # unpersisted at batch end
         spark.sparkContext.setJobDescription(None)
         self._n_actions += 1
         n_input = int(obs_in.get["n_input"])
@@ -581,7 +579,10 @@ class MergePipeline:
         # threshold gets the session's adaptive execution back for its
         # merge window — runtime skew-split/coalesce matter exactly when
         # batches are big (the restore-on-exit in process_batch still
-        # runs; setting the session value here is idempotent with it)
+        # runs; setting the session value here is idempotent with it).
+        # n_deduped is the HLL sketch's estimate unless
+        # EMAP_STAGE_DEDUP=exact, so a batch within the sketch's error of
+        # the threshold may land on either side of it.
         self._last_batch_aqe = (
             os.environ.get("EMAP_BATCH_AQE", "auto") == "on"
         )
@@ -620,21 +621,6 @@ class MergePipeline:
                 )
 
         stored = stored_from_for_batch(batch_id)
-        # FUSED multi-table commit (delta backend, >1 table): all tables'
-        # merge plans are BUILT concurrently (py4j/analysis round trips
-        # and the stores' tiny bucket-id collects overlap), then ONE
-        # partitioned write commits every table's row versions — the
-        # reference commits all of a message's tables in one transaction
-        # (core/.../App.java:92-101); independent fold sub-plans still
-        # run as concurrent stages of the single job.
-        # MEASURED (r5, 20k ADT batch, local[32], same session A/B):
-        # fused = 4 actions/batch but 5.6s vs per-table 6 actions and
-        # 4.1s — the single job's superset union + dynamic-partition
-        # write costs more than the two saved job submissions, so fusion
-        # is OPT-IN (EMAP_FUSED_COMMIT=1) until a workload where action
-        # count dominates (e.g. remote commit coordination) proves it
-        # out; correctness of both paths is pinned by test_fused_commit
-        # and the 3-backend durable equality test.
         # NOTE (r6, measured): conf-scoped AQE OFF for the fold actions
         # (the ledger's candidate for the ~4 s/batch scheduler floor —
         # each fold spawns ~28 AQE query-stage jobs) is catastrophically
@@ -643,29 +629,10 @@ class MergePipeline:
         # decisions (static estimates see unbounded parquet scans and
         # plan sort-merge over the full base). AQE stays on; the job-
         # submission overhead is the price of runtime join planning.
-        fuse = (
-            self.backend == "delta"
-            and self.storage_root is not None
-            and len(self.tables) > 1
-            and os.environ.get("EMAP_FUSED_COMMIT", "0") == "1"
-        )
-        if fuse:
-            from emap_spark.storage.delta import commit_fused
-
-            try:
-                preps = {
-                    name: ex.submit(
-                        self._prepare_fused_part, name, deduped, batch_id, stored
-                    )
-                    for name in self.tables
-                }
-                parts = {n: f.result() for n, f in preps.items()}
-                parts = {n: p for n, p in parts.items() if p is not None}
-                self._n_actions += commit_fused(batch_id, parts)
-                self._n_actions += sum(f.result() for f in aux_futs)
-            finally:
-                ex.shutdown()
-        elif ex is not None:
+        # Each table commits on its own (one write per table): a single
+        # fused write of every table's rows measured slower in both A/Bs
+        # (r5 5.6 vs 4.1 s, r9a 2.97 vs 1.79 s on a 20k batch).
+        if ex is not None:
             try:
                 futs = [
                     ex.submit(self._merge_one_table, name, deduped, batch_id, stored)

@@ -165,13 +165,14 @@ def test_crash_windows_converge(spark, tmp_path):
     assert delta.read_audit().count() == n_audit_1
 
 
-def test_manifest_schema_cache_matches_mergeschema_read(spark, tmp_path, monkeypatch):
+def test_manifest_schema_cache_matches_mergeschema_read(spark, tmp_path):
     """r9 optimization: commits record every written column's exact
     dataType in the manifest so _read_live reads with an explicit schema
     (no footer-merge job per table per batch). The fast path must agree
-    with the mergeSchema fallback through commits AND compaction, a
-    tombstoned (conflicting) type must force the fallback, and the
-    legacy env knob must force it too."""
+    with the mergeSchema fallback through commits AND compaction, and a
+    tombstoned (conflicting) type must force the fallback. The fallback
+    is reached through the manifest state a pre-type table loads with
+    (types_full=False)."""
     batches = [
         (range(0, 40), 1 + b, f"b{b}") if b % 3 else (range(20, 60), 1 + b, f"b{b}")
         for b in range(6)
@@ -187,9 +188,9 @@ def test_manifest_schema_cache_matches_mergeschema_read(spark, tmp_path, monkeyp
     assert all(types.get(c) for c in want), f"untyped columns: {[c for c in want if not types.get(c)]}"
 
     fast_cur, fast_aud = delta.read_current(), delta.read_audit()
-    monkeypatch.setenv("EMAP_DELTA_SCHEMA", "legacy")
+    man["types_full"] = False
     slow_cur, slow_aud = delta.read_current(), delta.read_audit()
-    monkeypatch.delenv("EMAP_DELTA_SCHEMA")
+    man["types_full"] = True
 
     for fast, slow in ((fast_cur, slow_cur), (fast_aud, slow_aud)):
         assert [(f.name, f.dataType) for f in fast.schema.fields] == [
@@ -203,9 +204,9 @@ def test_manifest_schema_cache_matches_mergeschema_read(spark, tmp_path, monkeyp
     # Spark job at DataFrameReader/plan-construction time, while the
     # mergeSchema fallback runs a footer-merge job there
     assert _jobs_during(spark, lambda: delta.read_current()) == 0
-    monkeypatch.setenv("EMAP_DELTA_SCHEMA", "legacy")
+    man["types_full"] = False
     assert _jobs_during(spark, lambda: delta.read_current()) >= 1
-    monkeypatch.delenv("EMAP_DELTA_SCHEMA")
+    man["types_full"] = True
 
     # a type conflict tombstones the column and disables the fast path
     # (falls back to mergeSchema rather than risk a wrong explicit schema)
@@ -343,3 +344,28 @@ def test_manifest_and_live_files_bounded_as_batches_accumulate(spark, tmp_path):
     assert len(rs) == 10000 and _ranges_contain(rs, 19998)
     rs2 = _ranges_merge(rs, range(1, 20000, 2))
     assert rs2 == [[0, 19999]]
+
+
+def test_fused_commit_manifest_refuses_to_load(spark, tmp_path):
+    """A manifest written by the removed fused multi-table commit points
+    some batches at a shared _fused/ dir (delta_paths). This build reads
+    only delta/batch=N, so loading it must fail loudly, naming the
+    format, instead of reporting those batches committed while every
+    read misses their rows."""
+    delta = DeltaLog(str(tmp_path / "d"), "t", ["k"], compact_every=8)
+    delta.load(spark)
+    _run(delta, spark, [(range(0, 5), 1, "a")])
+    man_path = delta._manifest_path()
+    with open(man_path) as fh:
+        man = json.load(fh)
+    man["deltas"].append(1)
+    man["delta_paths"] = {"1": str(tmp_path / "d" / "tables" / "_fused" / "batch=1" / "__tbl=t")}
+    with open(man_path, "w") as fh:
+        json.dump(man, fh)
+
+    old = DeltaLog(str(tmp_path / "d"), "t", ["k"], compact_every=8)
+    with pytest.raises(RuntimeError, match="fused-commit format"):
+        old.load(spark)
+    # a retried load refuses again rather than serving a half-loaded log
+    with pytest.raises(RuntimeError, match="fused-commit format"):
+        old.load(spark)

@@ -202,40 +202,23 @@ def test_ingest_scan_sizing_conf_is_scoped_to_the_batch(spark, tmpdir):
 
 
 def test_stage_cut_modes_produce_identical_state(spark, tmpdir):
-    """Staging-mode differential: the default persist+count staging and
-    the EMAP_STAGE_CUT=parquet fallback (durable-file staging for
-    memory-constrained deployments) must produce byte-identical engine
-    state, matching quarantine counts, and no leaked cached frame."""
-    import os
-
+    """The staged batch is persisted for the batch's merges and dropped
+    at batch end: no engine-held cache and no growth in the session's
+    persisted RDDs across batches."""
     adt = adt_messages(spark, n_patients=6)
     b1 = adt.filter(F.col("message_type") == "ADMIT")
     b2 = adt.filter(F.col("message_type") != "ADMIT")
 
-    d2 = tempfile.mkdtemp(prefix="durable_")
     jsc = spark.sparkContext._jsc.sc()
     n_cached_before = jsc.getPersistentRDDs().size()
-    try:
-        eng_p = EmapEngine(storage_root=tmpdir)  # default: persist
-        os.environ["EMAP_STAGE_CUT"] = "parquet"
-        try:
-            eng_f = EmapEngine(storage_root=d2)
-            for i, b in enumerate([b1, b2]):
-                os.environ["EMAP_STAGE_CUT"] = "persist"
-                eng_p.process_batch(b, i)
-                os.environ["EMAP_STAGE_CUT"] = "parquet"
-                eng_f.process_batch(b, i)
-        finally:
-            os.environ.pop("EMAP_STAGE_CUT", None)
-        assert _snapshot(eng_p) == _snapshot(eng_f)
-        # the persisted staged batch was dropped at batch end (other
-        # tests' localCheckpoint RDDs may linger in the shared session,
-        # so assert no GROWTH rather than emptiness; the engines' own
-        # localCheckpoints are eagerly replaced per batch, not grown)
-        assert eng_p.pipeline._staged_cache is None
-        assert jsc.getPersistentRDDs().size() <= n_cached_before + 8
-    finally:
-        shutil.rmtree(d2, ignore_errors=True)
+    eng = EmapEngine(storage_root=tmpdir)
+    for i, b in enumerate([b1, b2]):
+        eng.process_batch(b, i)
+        assert eng.pipeline._staged_cache is None
+    # other tests' localCheckpoint RDDs may linger in the shared session,
+    # so assert no GROWTH rather than emptiness; the engine's own
+    # localCheckpoints are eagerly replaced per batch, not grown
+    assert jsc.getPersistentRDDs().size() <= n_cached_before + 8
 
 
 def test_stage_cut_cache_released_on_merge_failure(spark, tmpdir):
@@ -262,21 +245,24 @@ def test_batch_aqe_auto_is_size_aware(spark, tmpdir, monkeypatch):
     scoped off for the merge window of SMALL batches (the measured
     micro-batch winner) and restored to the session value for batches at
     or above the row threshold, and the session conf always comes back
-    after the batch. The threshold is exercised via EMAP_BATCH_AQE_ROWS
-    so the test stays tiny."""
+    after the batch. The per-core threshold is patched so the test stays
+    tiny."""
+    from emap_spark.streaming import pipeline as pipeline_mod
+
     key = "spark.sql.adaptive.enabled"
     before = spark.conf.get(key)
     adt = adt_messages(spark, n_patients=40)  # 160 messages
 
     # below threshold: merge window ran AQE-off
-    monkeypatch.setenv("EMAP_BATCH_AQE_ROWS", "1000000")
+    monkeypatch.setattr(pipeline_mod, "AQE_ROWS_PER_CORE", 1_000_000)
     eng = EmapEngine(storage_root=tmpdir)
     eng.process_batch(adt, batch_id=0)
     assert eng.pipeline._last_batch_aqe is False
     assert spark.conf.get(key) == before  # restored
 
-    # at/above threshold: the session's AQE is restored for the merges
-    monkeypatch.setenv("EMAP_BATCH_AQE_ROWS", "100")
+    # at/above threshold (1 row per core): the session's AQE is
+    # restored for the merges
+    monkeypatch.setattr(pipeline_mod, "AQE_ROWS_PER_CORE", 1)
     eng.process_batch(adt_messages(spark, n_patients=50), batch_id=1)
     assert eng.pipeline._last_batch_aqe is True
     assert spark.conf.get(key) == before
@@ -286,5 +272,84 @@ def test_batch_aqe_auto_is_size_aware(spark, tmpdir, monkeypatch):
     eng.process_batch(adt_messages(spark, n_patients=60), batch_id=2)
     assert eng.pipeline._last_batch_aqe is False
     assert spark.conf.get(key) == before
-    monkeypatch.delenv("EMAP_BATCH_AQE")
-    monkeypatch.delenv("EMAP_BATCH_AQE_ROWS")
+
+
+def test_malformed_fold_rows_per_task_degrades_to_default(spark, tmpdir, monkeypatch):
+    """An empty, malformed or negative EMAP_FOLD_ROWS_PER_TASK falls back
+    to the default instead of failing every batch."""
+    from emap_spark.streaming.pipeline import fold_rows_per_task
+
+    for value in ("", "abc", "-5"):
+        monkeypatch.setenv("EMAP_FOLD_ROWS_PER_TASK", value)
+        assert fold_rows_per_task() == 2500
+    adt = adt_messages(spark, n_patients=3)
+    admits = F.col("message_type") == "ADMIT"
+    eng = EmapEngine(storage_root=tmpdir)
+    for i, (value, batch) in enumerate(
+        [("", adt.filter(admits)), ("abc", adt.filter(~admits))]
+    ):
+        monkeypatch.setenv("EMAP_FOLD_ROWS_PER_TASK", value)
+        eng.process_batch(batch, i)
+    assert {0, 1} <= eng.pipeline.applied_batches
+    assert eng.table("hospital_visit").count() == 3
+
+
+def _tables(eng):
+    """Every ADT star table's current and audit rows, order-free."""
+    out = {}
+    for name in eng.pipeline.tables:
+        aud = eng.audit(name)
+        out[name] = (
+            sorted(str(tuple(r)) for r in eng.table(name).collect()),
+            sorted(str(tuple(r)) for r in aud.collect()) if aud is not None else [],
+        )
+    return out
+
+
+def test_replay_after_partial_table_commit_converges(spark, tmpdir, monkeypatch):
+    """Crash window inside one batch: hospital_visit's DeltaLog committed
+    batch 1, but the other tables and the _applied.json marker did not.
+    A restarted engine replays the batch; the tables must equal an
+    uninterrupted run, and the pre-committed table must skip the replay
+    (its audit rows are not duplicated)."""
+    import os
+
+    from emap_spark.storage import DeltaLog
+
+    adt = adt_messages(spark, n_patients=3)
+    b0 = adt.filter(F.col("message_type") == "ADMIT")
+    b1 = adt.filter(F.col("message_type") != "ADMIT")
+
+    ref = EmapEngine(storage_root=os.path.join(tmpdir, "ref"))
+    ref.process_batch(b0, 0)
+    ref.process_batch(b1, 1)
+
+    root = os.path.join(tmpdir, "crash")
+    e1 = EmapEngine(storage_root=root)
+    e1.process_batch(b0, 0)
+    commit = DeltaLog.commit
+
+    def crash_unless_visits(self, batch_id, combined, n_parts=None):
+        if batch_id == 1 and self.name != "hospital_visit":
+            raise RuntimeError("simulated crash before this table's commit")
+        return commit(self, batch_id, combined, n_parts)
+
+    monkeypatch.setattr(DeltaLog, "commit", crash_unless_visits)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        e1.process_batch(b1, 1)
+    monkeypatch.setattr(DeltaLog, "commit", commit)
+    assert e1.pipeline.tables["hospital_visit"].store.has_batch(1)
+    assert not e1.pipeline.tables["mrn"].store.has_batch(1)
+    assert 1 not in e1.pipeline.applied_batches
+    n_aud = e1.audit("hospital_visit").count()
+    assert n_aud > 0  # batch 1 superseded visit versions
+    del e1
+
+    e2 = EmapEngine(storage_root=root)
+    e2.load(spark)
+    assert 1 not in e2.pipeline.applied_batches  # the marker never landed
+    e2.process_batch(b1, 1)
+    assert 1 in e2.pipeline.applied_batches
+    assert e2.audit("hospital_visit").count() == n_aud  # no re-merge
+    assert _tables(e2) == _tables(ref)
+    assert _snapshot(e2) == _snapshot(ref)
