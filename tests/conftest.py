@@ -16,7 +16,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("emap_spark_tests", cpus=8, shuffle_partitions=8)
+    # 4-8 task slots, no more than the cores the process may run on: the
+    # fixtures are tiny, so slots beyond the cores only add scheduling
+    # overhead (local[8] on a 4-core box ran the merge suites ~10% slower)
+    cpus = min(8, max(4, len(os.sched_getaffinity(0))))
+    s = get_spark("emap_spark_tests", cpus=cpus, shuffle_partitions=cpus)
     yield s
 
 

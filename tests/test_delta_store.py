@@ -310,9 +310,11 @@ def test_manifest_and_live_files_bounded_as_batches_accumulate(spark, tmp_path):
     flat list grew by one entry per batch and was rewritten per commit)."""
     delta = DeltaLog(str(tmp_path / "d"), "t", ["k"], compact_every=8)
     delta.load(spark)
+    # materialized once: every commit writes these same rows, so the
+    # merge plan need not re-run 96 times
     combined = merge_batch(
         None, _batch(spark, range(2), 1, "a"), SPEC, "2024-06-01 00:00:00"
-    ).combined
+    ).combined.localCheckpoint()
     sizes, live_counts = [], []
     n = 96
     for bid in range(n):
