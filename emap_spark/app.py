@@ -23,6 +23,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from emap_spark.expr_cache import cached_exprs
 from emap_spark.lineage import cut
 from emap_spark.operators.locations import infer_location_visits, occupancy
 from emap_spark.operators.merge import (
@@ -65,39 +66,15 @@ NON_VISIT_TYPES = (
 ) + IDENTITY_TYPES
 
 
-# Router expression trees are frame-INDEPENDENT unresolved Columns, but
-# building them costs 25–155 ms of py4j round trips per call (r9h
-# profile, OPTIMIZATION_r09.md §9/§12) and the ingest path rebuilds them
-# identically per table per batch — pure GIL-bound driver fixed cost.
-# Column objects are immutable expression ASTs, valid for the life of
-# the py4j gateway (JVM), so the cache lives AS AN ATTRIBUTE ON the
-# gateway object: a restarted SparkContext inside one JVM reuses it
-# safely, a NEW gateway (fresh JVM) necessarily starts empty, and —
-# unlike the previous id(gateway)-keyed module dict (ADVICE r9) — a
-# GC'd gateway whose address is reused can never serve stale Columns
-# bound to a dead JVM, because the cache died with the gateway.
-_EXPR_CACHE_ATTR = "_emap_router_expr_cache"
-
-
-def _cached_exprs(name: str, batch: DataFrame, build):
-    gw = batch.sparkSession.sparkContext._gateway
-    # NOTE: plain getattr() is unusable here — py4j's JavaGateway
-    # __getattr__ resolves any unknown attribute to a JVM member proxy
-    # instead of raising, so the instance __dict__ is consulted directly
-    cache = gw.__dict__.get(_EXPR_CACHE_ATTR)
-    if cache is None:
-        cache = gw.__dict__[_EXPR_CACHE_ATTR] = {}
-    got = cache.get(name)
-    if got is None:
-        got = cache[name] = build()
-    return got
+# the router's filter/projection Columns are built once per JVM
+# (see emap_spark.expr_cache)
 
 
 def _route_mrn(batch: DataFrame) -> DataFrame:
     """D1: every identified message upserts the Mrn row — except A47,
     whose mrn is a rekey TARGET applied at read time (creating it would
     trip the collision guard of apply_identifier_changes)."""
-    pred, cols = _cached_exprs("mrn", batch, _build_mrn_exprs)
+    pred, cols = cached_exprs("mrn", batch, _build_mrn_exprs)
     return batch.filter(pred).select(*cols)
 
 
@@ -118,7 +95,7 @@ def _route_demographic(batch: DataFrame) -> DataFrame:
     """D4: demographics ride on any ADT message carrying them. A29
     DELETE_PERSON tombstones the row (PersonController
     deletePersonInformation — M9 delete-with-audit)."""
-    pred, cols = _cached_exprs("demographic", batch, _build_demographic_exprs)
+    pred, cols = cached_exprs("demographic", batch, _build_demographic_exprs)
     return batch.filter(pred).select(*cols)
 
 
@@ -158,7 +135,7 @@ def _route_visit(batch: DataFrame) -> DataFrame:
       (removeDischargeInformation);
     - UPDATE_PATIENT_INFO and identity/pending messages never create or
       mutate visits."""
-    pred, cols = _cached_exprs("visit", batch, _build_visit_exprs)
+    pred, cols = cached_exprs("visit", batch, _build_visit_exprs)
     return batch.filter(pred).select(*cols)
 
 

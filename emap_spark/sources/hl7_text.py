@@ -7,17 +7,26 @@ Hl7Message.java). This module is the splitter re-expressed JVM-side:
 segments split on \\r, fields on |, components on ^ — no Python UDFs,
 the whole parse stays inside whole-stage codegen.
 
-parse_hl7: raw text -> map<segment_id, array<field array>> equivalent
-  (first occurrence per segment id kept as a fields array; repeated
-  segments like OBX exposed via explode_segments)
+segments / field / nth_segment_fields: per-read helpers (each call
+  splits the message again); the ORU, lab, clinical and waveform
+  parsers build on them. Repeated segments like OBX are exposed via
+  explode_segments.
 adt_from_hl7: MSH-9 trigger-event routing (AdtMessageFactory.java:
-  191-285 switch) -> ADT_SCHEMA-shaped rows.
+  191-285 switch) -> ADT_SCHEMA-shaped rows, parsed once per message
+  like the reference's hl7-reader: one scan of the input and three
+  projections — the message is split into segments once, each segment
+  group it reads (MSH, EVN, MRG, PID#1, PV1#1, PID#2, PV1#2) is picked
+  once, then every field is a plain array read on its group. An A17's
+  second patient is a second row of the same projection, not a second
+  scan. The built Columns are cached per JVM (emap_spark.expr_cache),
+  so a repeat call costs only the select analysis.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from emap_spark.expr_cache import cached_exprs
 from emap_spark.functions.hl7 import best_guess_valid_from, tristate_from_hl7
 
 # HL7 trigger event -> interchange message type: the FULL
@@ -81,11 +90,23 @@ def field(
     """SEG-n (optionally component m via ^; optionally of the k-th
     repeated segment). MSH numbering is shifted by one because MSH-1 is
     the field separator itself."""
-    idx = n - 1 if seg_id == "MSH" else n
-    f = F.try_element_at(nth_segment_fields(raw, seg_id, occurrence), F.lit(idx + 1))
+    seg = nth_segment_fields(raw, seg_id, occurrence)
+    return (_msh if seg_id == "MSH" else _at)(seg, n, component)
+
+
+def _at(seg: Column, n: int, component: int | None = None) -> Column:
+    """SEG-n (optionally component m via ^) of a segment's fields array;
+    fields[0] is the segment id, so SEG-n sits at 1-based index n + 1."""
+    f = F.try_element_at(seg, F.lit(n + 1))
     if component is not None:
         f = F.try_element_at(F.split(f, r"\^"), F.lit(component))
     return f
+
+
+def _msh(msh: Column, n: int, component: int | None = None) -> Column:
+    """MSH-n: MSH numbering is shifted by one because MSH-1 is the field
+    separator itself."""
+    return _at(msh, n - 1, component)
 
 
 def hl7_ts(col: Column) -> Column:
@@ -120,11 +141,12 @@ def tristate_ts(rawf: Column) -> Column:
     )
 
 
-def nhs_number_from_pid3(raw: Column, occurrence: int = 1) -> Column:
-    """PID-3 repetition (~) whose assigning authority (component 4) is
-    NHS -> its id component (PatientIdentifierUtils in the reference's
-    hl7-reader resolves MRN/NHS by authority, not position)."""
-    reps = F.split(field(raw, "PID", 3, occurrence=occurrence), "~")
+def nhs_number_from_pid3(pid3: Column) -> Column:
+    """PID-3 (the whole field) -> the id component of its repetition (~)
+    whose assigning authority (component 4) is NHS (PatientIdentifierUtils
+    in the reference's hl7-reader resolves MRN/NHS by authority, not
+    position)."""
+    reps = F.split(pid3, "~")
     nhs = F.filter(
         reps, lambda r: F.try_element_at(F.split(r, r"\^"), F.lit(4)) == "NHS"
     )
@@ -133,55 +155,85 @@ def nhs_number_from_pid3(raw: Column, occurrence: int = 1) -> Column:
     )
 
 
-def _adt_projection(raw: Column, occ: int) -> list:
-    """Full ADT_SCHEMA projection for the occ-th PID/PV1 group (occ=2 is
-    the second patient of an A17 swap; all other segments are shared)."""
-    trigger = field(raw, "MSH", 9, 2)
-    msg_type = F.lit(None).cast("string")
-    for trig, mtype in TRIGGER_TO_TYPE.items():
-        msg_type = F.when(trigger == trig, F.lit(mtype)).otherwise(msg_type)
+# segment groups adt_from_hl7 picks: column name -> (segment id, occurrence)
+_ADT_GROUPS = {
+    "msh": ("MSH", 1),
+    "evn": ("EVN", 1),
+    "mrg": ("MRG", 1),
+    "pid1": ("PID", 1),
+    "pv1_1": ("PV1", 1),
+    "pid2": ("PID", 2),
+    "pv1_2": ("PV1", 2),
+}
 
+
+def _adt_row(g: dict[str, Column], pid: Column, pv1: Column, second: bool) -> Column:
+    """ADT_SCHEMA-shaped struct for one PID/PV1 group (`second` is the
+    other patient of an A17 swap; MSH/EVN/MRG are shared)."""
+    msh = g["msh"]
+    trigger = _msh(msh, 9, 2)
+    msg_type = F.try_element_at(
+        F.create_map(*[F.lit(x) for kv in TRIGGER_TO_TYPE.items() for x in kv]), trigger
+    )
     # EVN-6 is the time the event actually occurred; EVN-2 the recorded
     # time (AdtMessageBuilder: bestGuessAtValidFrom prefers occurred)
-    event_occurred = F.coalesce(hl7_ts(field(raw, "EVN", 6)), hl7_ts(field(raw, "EVN", 2)))
-    recorded = hl7_ts(field(raw, "MSH", 7))
+    event_occurred = F.coalesce(hl7_ts(_at(g["evn"], 6)), hl7_ts(_at(g["evn"], 2)))
+    recorded = hl7_ts(_msh(msh, 7))
     # A15/A26 carry the planned destination in PV1-42 (pending location)
-    pend_loc = field(raw, "PV1", 42, occurrence=occ)
-    cur_loc = field(raw, "PV1", 3, occurrence=occ)
+    cur_loc = _at(pv1, 3)
     loc = F.when(
         trigger.isin("A15", "A26"),
-        F.coalesce(F.nullif(pend_loc, F.lit("")), cur_loc),
+        F.coalesce(F.nullif(_at(pv1, 42), F.lit("")), cur_loc),
     ).otherwise(cur_loc)
-    msg_id = F.coalesce(field(raw, "MSH", 10), F.lit("?"))
-    if occ > 1:
+    msg_id = F.coalesce(_msh(msh, 10), F.lit("?"))
+    if second:
         msg_id = F.concat(msg_id, F.lit("-B"))
-    death_raw = field(raw, "PID", 29, occurrence=occ)
-    return [
+    return F.struct(
         msg_id.alias("source_message_id"),
-        field(raw, "MSH", 4, 1).alias("source_system"),
+        _msh(msh, 4, 1).alias("source_system"),
         best_guess_valid_from(event_occurred, recorded).alias("valid_from"),
         msg_type.alias("message_type"),
-        field(raw, "PID", 3, 1, occurrence=occ).alias("mrn"),
-        nhs_number_from_pid3(raw, occ).alias("nhs_number"),
-        field(raw, "PV1", 19, 1, occurrence=occ).alias("visit_number"),
-        tristate_from_hl7(field(raw, "PV1", 2, 1, occurrence=occ)).alias("patient_class"),
+        _at(pid, 3, 1).alias("mrn"),
+        nhs_number_from_pid3(_at(pid, 3)).alias("nhs_number"),
+        _at(pv1, 19, 1).alias("visit_number"),
+        tristate_from_hl7(_at(pv1, 2, 1)).alias("patient_class"),
         tristate_from_hl7(loc).alias("location"),
-        tristate_from_hl7(field(raw, "PV1", 6, occurrence=occ)).alias("previous_location"),
+        tristate_from_hl7(_at(pv1, 6)).alias("previous_location"),
         event_occurred.alias("event_occurred"),
         recorded.alias("recorded_datetime"),
-        tristate_ts(field(raw, "PV1", 44, occurrence=occ)).alias("admission_datetime"),
-        tristate_ts(field(raw, "PV1", 45, occurrence=occ)).alias("discharge_datetime"),
-        tristate_from_hl7(field(raw, "PV1", 36, occurrence=occ)).alias("discharge_disposition"),
-        tristate_from_hl7(field(raw, "PV1", 37, 1, occurrence=occ)).alias("discharge_destination"),
-        tristate_from_hl7(field(raw, "PID", 5, 2, occurrence=occ)).alias("name_given"),
-        tristate_from_hl7(field(raw, "PID", 5, 1, occurrence=occ)).alias("name_family"),
-        tristate_ts(field(raw, "PID", 7, occurrence=occ)).alias("birth_datetime"),
-        tristate_from_hl7(field(raw, "PID", 8, 1, occurrence=occ)).alias("sex"),
-        tristate_from_hl7(field(raw, "PID", 30, occurrence=occ)).alias("death_indicator"),
-        tristate_ts(death_raw).alias("death_datetime"),
-        field(raw, "MRG", 1, 1).alias("retired_mrn"),
-        field(raw, "MRG", 5, 1).alias("retired_visit_number"),
+        tristate_ts(_at(pv1, 44)).alias("admission_datetime"),
+        tristate_ts(_at(pv1, 45)).alias("discharge_datetime"),
+        tristate_from_hl7(_at(pv1, 36)).alias("discharge_disposition"),
+        tristate_from_hl7(_at(pv1, 37, 1)).alias("discharge_destination"),
+        tristate_from_hl7(_at(pid, 5, 2)).alias("name_given"),
+        tristate_from_hl7(_at(pid, 5, 1)).alias("name_family"),
+        tristate_ts(_at(pid, 7)).alias("birth_datetime"),
+        tristate_from_hl7(_at(pid, 8, 1)).alias("sex"),
+        tristate_from_hl7(_at(pid, 30)).alias("death_indicator"),
+        tristate_ts(_at(pid, 29)).alias("death_datetime"),
+        _at(g["mrg"], 1, 1).alias("retired_mrn"),
+        _at(g["mrg"], 5, 1).alias("retired_visit_number"),
+    )
+
+
+def _build_adt_exprs(raw_col: str) -> tuple:
+    """The three projections of adt_from_hl7 plus its row filter."""
+    segs = segments(F.col(raw_col)).alias("segs")
+    picks = [
+        F.try_element_at(
+            F.filter(F.col("segs"), lambda s: s.getItem(0) == seg_id), F.lit(occ)
+        ).alias(name)
+        for name, (seg_id, occ) in _ADT_GROUPS.items()
     ]
+    g = {name: F.col(name) for name in _ADT_GROUPS}
+    # an A17 swap carries a second PID/PV1 group: emitted as a second row
+    # of the same projection (array_compact drops the null when absent)
+    swap = (_msh(g["msh"], 9, 2) == "A17") & g["pid2"].isNotNull()
+    rows = F.inline(F.array_compact(F.array(
+        _adt_row(g, g["pid1"], g["pv1_1"], second=False),
+        F.when(swap, _adt_row(g, g["pid2"], g["pv1_2"], second=True)),
+    )))
+    return segs, picks, rows, F.col("message_type").isNotNull()
 
 
 def adt_from_hl7(df: DataFrame, raw_col: str = "hl7") -> DataFrame:
@@ -190,13 +242,10 @@ def adt_from_hl7(df: DataFrame, raw_col: str = "hl7") -> DataFrame:
     unsupported-message skip; AdtMessageFactory.java:191-285). An A17
     swap carries two PID/PV1 groups and emits TWO rows — each patient's
     PV1-3 already holds their new location, so each row is one move."""
-    raw = F.col(raw_col)
-    trigger = field(raw, "MSH", 9, 2)
-    first = df.select(*_adt_projection(raw, 1))
-    second = df.filter(
-        (trigger == "A17") & nth_segment_fields(raw, "PID", 2).isNotNull()
-    ).select(*_adt_projection(raw, 2))
-    return first.unionByName(second).filter(F.col("message_type").isNotNull())
+    segs, picks, rows, known = cached_exprs(
+        ("adt_from_hl7", raw_col), df, lambda: _build_adt_exprs(raw_col)
+    )
+    return df.select(segs).select(*picks).select(rows).filter(known)
 
 
 def synthetic_hl7_messages(spark, n: int = 20) -> DataFrame:

@@ -43,3 +43,12 @@ def test_knob_sides_parse():
     assert sides["B"][2] == {"EMAP_BATCH_AQE": None}  # unset removes the var
     with pytest.raises(SystemExit):
         _sides(_parse(["--knob", "EMAP_BATCH_AQE=off", "--lane", "adt"]))
+
+
+def test_parse_lane_needs_no_sf_dir(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_SF_DIR", raising=False)
+    args = _parse(["--tree", "../parent", "--lane", "parse"])
+    assert args.lane == "parse" and args.sf_dir is None
+    # a query lane still insists on a scale-factor dir
+    with pytest.raises(SystemExit):
+        _parse(["--tree", "../parent", "--lane", "q01_pricing_summary"])

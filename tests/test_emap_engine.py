@@ -80,7 +80,7 @@ def test_router_expr_cache_keyed_on_gateway_object(spark):
     (same JVM) keeps the still-valid Columns."""
     import gc
 
-    from emap_spark import app
+    from emap_spark import app, expr_cache
 
     calls: list[int] = []
 
@@ -104,12 +104,12 @@ def test_router_expr_cache_keyed_on_gateway_object(spark):
             self.sparkSession = _FakeSession(gw)
 
     gw1 = _FakeGw()
-    assert app._cached_exprs("t", _FakeDF(gw1), build) == ("pred", "cols")
-    assert app._cached_exprs("t", _FakeDF(gw1), build) == ("pred", "cols")
+    assert expr_cache.cached_exprs("t", _FakeDF(gw1), build) == ("pred", "cols")
+    assert expr_cache.cached_exprs("t", _FakeDF(gw1), build) == ("pred", "cols")
     assert len(calls) == 1  # memoized on the gateway
     # SparkContext "restart" within one gateway: a NEW context/session
     # object wrapping the SAME gateway reuses the cache
-    assert app._cached_exprs("t", _FakeDF(gw1), build) == ("pred", "cols")
+    assert expr_cache.cached_exprs("t", _FakeDF(gw1), build) == ("pred", "cols")
     assert len(calls) == 1
     # the cache dies WITH the gateway: a new gateway object — possibly
     # at the dead one's reused address — must rebuild
@@ -117,13 +117,13 @@ def test_router_expr_cache_keyed_on_gateway_object(spark):
     del gw1
     gc.collect()
     gw2 = _FakeGw()  # may or may not reuse addr1; either way must rebuild
-    app._cached_exprs("t", _FakeDF(gw2), build)
+    expr_cache.cached_exprs("t", _FakeDF(gw2), build)
     assert len(calls) == 2, f"stale cache served (addr reuse={id(gw2) == addr1})"
-    assert getattr(gw2, app._EXPR_CACHE_ATTR)["t"] == ("pred", "cols")
+    assert getattr(gw2, expr_cache.EXPR_CACHE_ATTR)["t"] == ("pred", "cols")
 
     # the real gateway: identical objects returned across calls (the
     # per-batch py4j round-trip rebuild is gone)
     df = spark.range(1)
-    e1 = app._cached_exprs("mrn", df, app._build_mrn_exprs)
-    e2 = app._cached_exprs("mrn", df, app._build_mrn_exprs)
+    e1 = expr_cache.cached_exprs("mrn", df, app._build_mrn_exprs)
+    e2 = expr_cache.cached_exprs("mrn", df, app._build_mrn_exprs)
     assert e1 is e2

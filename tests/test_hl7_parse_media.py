@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from emap_spark.multimodal.binary_ops import (
@@ -10,7 +13,17 @@ from emap_spark.multimodal.binary_ops import (
     frame_sample,
     synthetic_media,
 )
-from emap_spark.sources.hl7_text import adt_from_hl7, field, hl7_ts, synthetic_hl7_messages
+from emap_spark.functions.hl7 import best_guess_valid_from, tristate_from_hl7
+from emap_spark.sources.hl7_text import (
+    TRIGGER_TO_TYPE,
+    adt_from_hl7,
+    field,
+    hl7_ts,
+    nth_segment_fields,
+    synthetic_hl7_adt_full,
+    synthetic_hl7_messages,
+    tristate_ts,
+)
 
 
 def test_hl7_field_extraction(spark):
@@ -39,6 +52,171 @@ def test_adt_from_hl7_routing(spark):
     assert r.mrn == "40180000"
     assert r.location.value.startswith("T42E")
     assert r.name_family.value == "Family0" and r.name_given.value == "Given0"
+
+
+def _reference_adt(df):
+    """The per-field ADT projection adt_from_hl7 replaced, kept as the
+    differential oracle: every read goes through the public field()
+    helper (re-splitting the whole message), and the A17 second patient
+    is a second projection over a second scan, unioned back."""
+    raw = F.col("hl7")
+    trigger = field(raw, "MSH", 9, 2)
+
+    def nhs(occ):
+        reps = F.split(field(raw, "PID", 3, occurrence=occ), "~")
+        hit = F.filter(
+            reps, lambda r: F.try_element_at(F.split(r, r"\^"), F.lit(4)) == "NHS"
+        )
+        return F.try_element_at(F.split(F.try_element_at(hit, F.lit(1)), r"\^"), F.lit(1))
+
+    def projection(occ):
+        msg_type = F.lit(None).cast("string")
+        for trig, mtype in TRIGGER_TO_TYPE.items():
+            msg_type = F.when(trigger == trig, F.lit(mtype)).otherwise(msg_type)
+        event_occurred = F.coalesce(
+            hl7_ts(field(raw, "EVN", 6)), hl7_ts(field(raw, "EVN", 2))
+        )
+        recorded = hl7_ts(field(raw, "MSH", 7))
+        cur_loc = field(raw, "PV1", 3, occurrence=occ)
+        loc = F.when(
+            trigger.isin("A15", "A26"),
+            F.coalesce(F.nullif(field(raw, "PV1", 42, occurrence=occ), F.lit("")), cur_loc),
+        ).otherwise(cur_loc)
+        msg_id = F.coalesce(field(raw, "MSH", 10), F.lit("?"))
+        if occ > 1:
+            msg_id = F.concat(msg_id, F.lit("-B"))
+
+        def pid(n, c=None):
+            return field(raw, "PID", n, c, occurrence=occ)
+
+        def pv1(n, c=None):
+            return field(raw, "PV1", n, c, occurrence=occ)
+
+        return [
+            msg_id.alias("source_message_id"),
+            field(raw, "MSH", 4, 1).alias("source_system"),
+            best_guess_valid_from(event_occurred, recorded).alias("valid_from"),
+            msg_type.alias("message_type"),
+            pid(3, 1).alias("mrn"),
+            nhs(occ).alias("nhs_number"),
+            pv1(19, 1).alias("visit_number"),
+            tristate_from_hl7(pv1(2, 1)).alias("patient_class"),
+            tristate_from_hl7(loc).alias("location"),
+            tristate_from_hl7(pv1(6)).alias("previous_location"),
+            event_occurred.alias("event_occurred"),
+            recorded.alias("recorded_datetime"),
+            tristate_ts(pv1(44)).alias("admission_datetime"),
+            tristate_ts(pv1(45)).alias("discharge_datetime"),
+            tristate_from_hl7(pv1(36)).alias("discharge_disposition"),
+            tristate_from_hl7(pv1(37, 1)).alias("discharge_destination"),
+            tristate_from_hl7(pid(5, 2)).alias("name_given"),
+            tristate_from_hl7(pid(5, 1)).alias("name_family"),
+            tristate_ts(pid(7)).alias("birth_datetime"),
+            tristate_from_hl7(pid(8, 1)).alias("sex"),
+            tristate_from_hl7(pid(30)).alias("death_indicator"),
+            tristate_ts(pid(29)).alias("death_datetime"),
+            field(raw, "MRG", 1, 1).alias("retired_mrn"),
+            field(raw, "MRG", 5, 1).alias("retired_visit_number"),
+        ]
+
+    first = df.select(*projection(1))
+    second = df.filter(
+        (trigger == "A17") & nth_segment_fields(raw, "PID", 2).isNotNull()
+    ).select(*projection(2))
+    return first.unionByName(second).filter(F.col("message_type").isNotNull())
+
+
+def _edge_messages() -> list[str]:
+    def msh(trig, mid):
+        return f"MSH|^~\\&|EPIC|UCLH|x|x|20240501101500||ADT^{trig}|{mid}|P|2.4"
+
+    def pid(mrn, pid3=None, death=""):
+        f = [""] * 31
+        f[0], f[1], f[3], f[5] = "PID", "1", pid3 or f"{mrn}^^^MRN", "Fam^Giv"
+        f[29] = death
+        return "|".join(f)
+
+    def pv1(bed, enc, pend=None, discharge=""):
+        f = [""] * 46
+        f[0], f[1], f[2], f[3], f[19] = "PV1", "1", "I", bed, enc
+        f[42] = "" if pend is None else pend
+        f[45] = discharge
+        return "|".join(f)
+
+    evn = "EVN|A01|20240501101000"
+    return [
+        # no EVN: valid_from falls back to MSH-7
+        "\r".join([msh("A01", "NOEVN"), pid("M1"), pv1("W1^B1^1", "E1")]),
+        # A17 with one PID/PV1 group: one row, no -B id
+        "\r".join([msh("A17", "SWAP1"), evn, pid("M2"), pv1("W1^B1^2", "E2")]),
+        # A17 with two groups: two rows
+        "\r".join([msh("A17", "SWAP2"), evn, pid("M3"), pv1("W1^B1^3", "E3"),
+                   pid("M4"), pv1("W1^B1^4", "E4")]),
+        # unknown trigger: dropped
+        "\r".join([msh("A99", "UNKNOWN"), evn, pid("M5"), pv1("W1^B1^5", "E5")]),
+        # "" DELETE markers in PV1-45 and PID-29
+        "\r".join([msh("A03", "DELETES"), evn, pid("M6", death='""'),
+                   pv1("W1^B1^6", "E6", discharge='""')]),
+        # trailing \r and an empty segment
+        "\r".join([msh("A08", "TRAILING"), evn, "", pid("M7"), pv1("W1^B1^7", "E7")]) + "\r",
+        # NHS as the second PID-3 repetition
+        "\r".join([msh("A08", "NHS2"), evn, pid("M8", pid3="M8^^^MRN~9990008^^^NHS"),
+                   pv1("W1^B1^8", "E8")]),
+        # A15 with an empty PV1-42: location falls back to PV1-3
+        "\r".join([msh("A15", "PENDEMPTY"), evn, pid("M9"), pv1("W1^B1^9", "E9", pend="")]),
+    ]
+
+
+def test_adt_from_hl7_matches_per_field_reference(spark):
+    """Differential: the one-split, one-scan parse gives the same rows
+    and the same schema (names, types, nullability) as the per-field
+    reference, over the full trigger fixture plus hand-written edges."""
+    frame = synthetic_hl7_adt_full(spark, n=40).select("hl7").union(
+        spark.createDataFrame([(m,) for m in _edge_messages()], "hl7 string")
+    )
+    got, ref = adt_from_hl7(frame), _reference_adt(frame)
+    assert got.schema == ref.schema
+    # exceptAll both ways, as multisets of the two collected sides: one
+    # action per side (a Spark-side exceptAll of these plans costs ~12 s)
+    rows, ref_rows = Counter(got.collect()), Counter(ref.collect())
+    extra, missing = rows - ref_rows, ref_rows - rows
+    assert not extra and not missing, (extra, missing)
+
+    by_id = {r.source_message_id: r for r in rows}
+    # 42 fixture rows; the 8 edges drop the unknown trigger and add SWAP2-B
+    assert rows.total() == 42 + 8
+    noevn = by_id["NOEVN"]
+    assert noevn.event_occurred is None and noevn.valid_from == noevn.recorded_datetime
+    assert "SWAP1-B" not in by_id and by_id["SWAP2-B"].mrn == "M4"
+    assert "UNKNOWN" not in by_id
+    assert by_id["DELETES"].discharge_datetime.status == "DELETE"
+    assert by_id["DELETES"].death_datetime.status == "DELETE"
+    assert by_id["TRAILING"].mrn == "M7"
+    assert by_id["NHS2"].nhs_number == "9990008"
+    assert by_id["PENDEMPTY"].location.value == "W1^B1^9"
+
+
+def test_adt_from_hl7_plan_shape(spark, tmp_path):
+    """One scan, no Union, the \\r split computed once (CollapseProject
+    has not inlined the segment picks back into every field read), and
+    the built Columns are cached per session."""
+    from emap_spark import expr_cache
+
+    path = str(tmp_path / "raw")
+    synthetic_hl7_messages(spark, n=4).write.parquet(path)
+    raw = spark.read.parquet(path)
+    qe = adt_from_hl7(raw)._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    assert "Union" not in optimized
+    assert optimized.count("Relation [") == 1
+    executed = qe.executedPlan().toString()
+    assert len(re.findall(r"split\(hl7#\d+, \r, -1\)", executed)) == 1
+
+    cache = spark.sparkContext._gateway.__dict__[expr_cache.EXPR_CACHE_ATTR]
+    first = cache[("adt_from_hl7", "hl7")]
+    adt_from_hl7(raw)
+    assert cache[("adt_from_hl7", "hl7")] is first
+    assert all(a is b for a, b in zip(first, cache[("adt_from_hl7", "hl7")]))
 
 
 def test_media_decode_deterministic(spark):

@@ -15,8 +15,9 @@ the variable), or this checkout against another one (a `git clone` or
 
 Lanes: `adt` times bench.py's 20k and 100k ADT batches, `adt-big` one
 batch of --patients x 4 messages, `collation` the 30-bed waveform lane
-(min of 2); any registered query name runs it at --sf-dir (min of 2,
-warmed on the sibling sf0.001 dir when present).
+(min of 2), `parse` the materialized HL7 ADT parse of 1,000 generated
+messages (after two warm reps); any registered query name runs it at
+--sf-dir (min of 2, warmed on the sibling sf0.001 dir when present).
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ import time
 _REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _RESULT = "AB_RESULT "
 _REP_TIMEOUT_S = 1800
-FIXED_LANES = ("adt", "adt-big", "collation")
+FIXED_LANES = ("adt", "adt-big", "collation", "parse")
 
 
 # -- protocol (pure Python) ------------------------------------------------
@@ -106,6 +107,18 @@ def _rep_collation(spark) -> dict[str, float]:
     )}
 
 
+def _rep_parse(spark) -> dict[str, float]:
+    """The sources layer as the benchmark runs it: raw HL7 read from
+    parquet, parsed and materialized once."""
+    from emap_spark.lineage import cut
+    from emap_spark.sources.hl7_text import adt_from_hl7, synthetic_hl7_adt_full
+
+    raw = cut(synthetic_hl7_adt_full(spark, n=1000).select("hl7"))
+    for _ in range(2):
+        cut(adt_from_hl7(raw))
+    return {"parse": _timed(lambda: cut(adt_from_hl7(raw)))}
+
+
 def _rep_query(spark, args) -> dict[str, float]:
     from emap_spark.registry import queries
 
@@ -130,6 +143,8 @@ def _run_rep(args) -> None:
         secs = _rep_adt(spark, {"batch": args.patients})
     elif args.lane == "collation":
         secs = _rep_collation(spark)
+    elif args.lane == "parse":
+        secs = _rep_parse(spark)
     else:
         secs = _rep_query(spark, args)
     print(_RESULT + json.dumps({k: round(v, 3) for k, v in secs.items()}), flush=True)
