@@ -23,7 +23,11 @@ Semantics reproduced:
 - zero-length stays are guarded (:384-396): same-timestamp moves keep
   only the last arrival per (visit, time)
 
-One shuffle on visit_number; all logic is within-partition windows.
+Plan shape: one scan of the movement history and one shuffle, on
+visit_number. Every window partitions by visit_number plus other keys,
+so all three (cancel voiding, the same-time tie guard, the visit
+sequence) run within those partitions, and one projection emits every
+interval kind as rows of one array: no join, no union.
 """
 
 from __future__ import annotations
@@ -41,41 +45,49 @@ CANCEL_OF = {
 
 
 def _void_cancelled(moves: DataFrame) -> DataFrame:
-    """Pair each cancel with its rank-matched target and drop both."""
+    """Drop every cancel and the event it voids, in one window.
+
+    The i-th cancel of a (visit_number, base_type, loc) group voids the
+    i-th real event of that group, both in (valid_from,
+    source_message_id) order: an event is voided when its rank among the
+    group's events is at most the group's cancel count. A cancel with no
+    target voids nothing.
+
+    Null keys never pair: an event whose visit_number or loc is null is
+    never voided, even by a cancel with the same null key (the pairing
+    keeps the semantics of an equi anti-join on the group keys, which
+    never matches a null)."""
     base_type = F.col("message_type")
     for c, t in CANCEL_OF.items():
         base_type = F.when(F.col("message_type") == c, F.lit(t)).otherwise(base_type)
     is_cancel = F.col("message_type").isin(*CANCEL_OF)
-    m = moves.withColumn("base_type", base_type).withColumn("is_cancel", is_cancel)
     wk = W.partitionBy("visit_number", "base_type", "loc").orderBy("valid_from", "source_message_id")
-    m = m.withColumn(
-        "pair_rank",
-        F.sum(F.when(F.col("is_cancel"), 0).otherwise(1)).over(
-            wk.rowsBetween(W.unboundedPreceding, W.currentRow)
-        ),
+    event_rank = F.count_if(~is_cancel).over(wk.rowsBetween(W.unboundedPreceding, W.currentRow))
+    n_cancels = F.count_if(is_cancel).over(
+        wk.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     )
-    # i-th cancel in a (visit,type,loc) group voids the i-th real event
-    cancels = m.filter(F.col("is_cancel")).withColumn(
-        "void_rank",
-        F.row_number().over(
-            W.partitionBy("visit_number", "base_type", "loc").orderBy(
-                "valid_from", "source_message_id"
-            )
-        ),
+    voided = (
+        (F.col("__event_rank") <= F.col("__n_cancels"))
+        & F.col("visit_number").isNotNull()
+        & F.col("loc").isNotNull()
     )
-    events = m.filter(~F.col("is_cancel")).withColumn(
-        "event_rank",
-        F.row_number().over(
-            W.partitionBy("visit_number", "base_type", "loc").orderBy(
-                "valid_from", "source_message_id"
-            )
-        ),
+    return (
+        moves.withColumn("base_type", base_type)
+        .select("*", event_rank.alias("__event_rank"), n_cancels.alias("__n_cancels"))
+        .filter(~is_cancel & ~voided)
+        .drop("__event_rank", "__n_cancels")
     )
-    voided = cancels.select(
-        "visit_number", "base_type", "loc", F.col("void_rank").alias("event_rank")
-    )
-    return events.join(
-        voided, ["visit_number", "base_type", "loc", "event_rank"], "left_anti"
+
+
+def _visit(loc, admitted, discharged, inferred_admission, inferred_discharge):
+    """One location_visit row as a struct (flags: bools or Columns)."""
+    return F.struct(
+        F.col("visit_number"),
+        loc.alias("location_string"),
+        admitted.alias("admission_datetime"),
+        discharged.alias("discharge_datetime"),
+        F.lit(inferred_admission).alias("inferred_admission"),
+        F.lit(inferred_discharge).alias("inferred_discharge"),
     )
 
 
@@ -96,27 +108,34 @@ def infer_location_visits(adt: DataFrame) -> DataFrame:
         F.col("location")["value"].alias("loc"),
         F.col("previous_location")["value"].alias("prev_loc"),
     )
-    moves = _void_cancelled(moves)
+    # the one shuffle: each window below partitions by visit_number
+    # plus other keys, so this clustering satisfies all three
+    moves = _void_cancelled(moves.repartition("visit_number"))
 
     # zero-length guard: same (visit, time) keeps the last message only
     wt = W.partitionBy("visit_number", "valid_from").orderBy(F.col("source_message_id").desc())
     moves = moves.withColumn("__tie", F.row_number().over(wt)).filter(F.col("__tie") == 1)
 
     wv = W.partitionBy("visit_number").orderBy("valid_from", "source_message_id")
-    seq = (
-        moves.withColumn("next_type", F.lead("message_type").over(wv))
-        .withColumn("next_base", F.lead("base_type").over(wv))
-        .withColumn("next_t", F.lead("valid_from").over(wv))
-        .withColumn("next_loc", F.lead("loc").over(wv))
-        .withColumn("next_prev_loc", F.lead("prev_loc").over(wv))
-        .withColumn(
-            "prev_arrival_loc",
-            F.last(
-                F.when(F.col("base_type").isin(*ARRIVAL_TYPES), F.col("loc")),
-                ignorenulls=True,
-            ).over(wv.rowsBetween(W.unboundedPreceding, -1)),
-        )
+    loc, prev_loc, t = F.col("loc"), F.col("prev_loc"), F.col("valid_from")
+    is_arrival = F.col("base_type").isin(*ARRIVAL_TYPES)
+    is_discharge = F.col("base_type") == "DISCHARGE"
+    seq = moves.select(
+        "*",
+        *[
+            F.lead(c).over(wv).alias(f"next_{c}")
+            for c in ("base_type", "valid_from", "loc", "prev_loc")
+        ],
+        F.last(F.when(is_arrival, loc), ignorenulls=True)
+        .over(wv.rowsBetween(W.unboundedPreceding, -1))
+        .alias("prev_arrival_loc"),
     )
+    # base_type is never null, so a null lead means no next event
+    has_next = F.col("next_base_type").isNotNull()
+    next_t, next_loc, next_prev_loc = (
+        F.col(f"next_{c}") for c in ("valid_from", "loc", "prev_loc")
+    )
+    prev_arrival_loc = F.col("prev_arrival_loc")
 
     # inferred-interval offsets mirror inferPreviousLocationData
     # (:477-517): the gap stay squeezed before a closing event occupies
@@ -125,85 +144,47 @@ def infer_location_visits(adt: DataFrame) -> DataFrame:
     # bearing, all flagged, never colliding with real event times.
     s1, s2, s3 = (F.expr(f"INTERVAL {n} SECONDS") for n in (1, 2, 3))
 
-    arrivals = seq.filter(F.col("base_type").isin(*ARRIVAL_TYPES))
     # the next event implies this stay ended EARLIER than the event when
     # (a) it squeezed an unseen previous location in between, or (b) it
     # is a discharge that happened somewhere else
-    gap_next = F.col("next_prev_loc").isNotNull() & (
-        F.col("next_prev_loc") != F.col("loc")
-    )
+    gap_next = next_prev_loc.isNotNull() & (next_prev_loc != loc)
     discharge_elsewhere = (
-        (F.col("next_base") == "DISCHARGE")
-        & F.col("next_loc").isNotNull()
-        & (F.col("next_loc") != F.col("loc"))
+        (F.col("next_base_type") == "DISCHARGE") & next_loc.isNotNull() & (next_loc != loc)
     )
     implied_end = gap_next | discharge_elsewhere
-    intervals = arrivals.select(
-        "visit_number",
-        F.col("loc").alias("location_string"),
-        F.col("valid_from").alias("admission_datetime"),
+    # every interval kind is one optional element of one array, so the
+    # sequence is read once (no union of filtered copies)
+    visits = F.array(
+        # an arrival opens a stay that the next movement closes
+        F.when(is_arrival, _visit(
+            loc,
+            t,
+            F.when(has_next, F.when(implied_end, next_t - s2).otherwise(next_t)),
+            False,
+            F.when(has_next, implied_end).otherwise(F.lit(False)),
+        )),
+        # gap repair: the next event's previous_location names a location
+        # we never saw an arrival for -> inferred interval squeezed
+        # between the known stay and the next event
+        F.when(is_arrival & gap_next,
+               _visit(next_prev_loc, next_t - s3, next_t - s2, True, True)),
+        # discharge-opens-stay (:424-475 + createLocationWithInferredAdmit):
+        # a discharge at a location with no open stay materializes the
+        # stay it closes, with an inferred admission one second before
         F.when(
-            F.col("next_type").isNotNull(),
-            F.when(implied_end, F.col("next_t") - s2).otherwise(F.col("next_t")),
-        ).alias("discharge_datetime"),
-        F.lit(False).alias("inferred_admission"),
-        F.when(F.col("next_type").isNotNull(), implied_end)
-        .otherwise(F.lit(False))
-        .alias("inferred_discharge"),
+            is_discharge & loc.isNotNull()
+            & (prev_arrival_loc.isNull() | (prev_arrival_loc != loc)),
+            _visit(loc, t - s1, t, True, False),
+        ),
+        # an orphan discharge (no arrivals at all) may still name an
+        # unseen previous location -> squeeze its gap stay in as well
+        F.when(
+            is_discharge & prev_arrival_loc.isNull()
+            & prev_loc.isNotNull() & (prev_loc != loc),
+            _visit(prev_loc, t - s3, t - s2, True, True),
+        ),
     )
-
-    # gap repair: the next event's previous_location names a location we
-    # never saw an arrival for -> inferred interval squeezed between the
-    # known stay and the next event (inferPreviousLocationData :477-517)
-    inferred = (
-        arrivals.filter(gap_next)
-        .select(
-            "visit_number",
-            F.col("next_prev_loc").alias("location_string"),
-            (F.col("next_t") - s3).alias("admission_datetime"),
-            (F.col("next_t") - s2).alias("discharge_datetime"),
-            F.lit(True).alias("inferred_admission"),
-            F.lit(True).alias("inferred_discharge"),
-        )
-    )
-
-    # discharge-opens-stay (:424-475 + createLocationWithInferredAdmit):
-    # a discharge at a location with no open stay materializes the stay
-    # it closes, with an inferred admission one second before
-    discharges = seq.filter(F.col("base_type") == "DISCHARGE")
-    opens = discharges.filter(
-        F.col("loc").isNotNull()
-        & (
-            F.col("prev_arrival_loc").isNull()
-            | (F.col("prev_arrival_loc") != F.col("loc"))
-        )
-    ).select(
-        "visit_number",
-        F.col("loc").alias("location_string"),
-        (F.col("valid_from") - s1).alias("admission_datetime"),
-        F.col("valid_from").alias("discharge_datetime"),
-        F.lit(True).alias("inferred_admission"),
-        F.lit(False).alias("inferred_discharge"),
-    )
-    # an orphan discharge (no arrivals at all) may still name an unseen
-    # previous location -> squeeze its gap stay in as well
-    orphan_gaps = discharges.filter(
-        F.col("prev_arrival_loc").isNull()
-        & F.col("prev_loc").isNotNull()
-        & (F.col("prev_loc") != F.col("loc"))
-    ).select(
-        "visit_number",
-        F.col("prev_loc").alias("location_string"),
-        (F.col("valid_from") - s3).alias("admission_datetime"),
-        (F.col("valid_from") - s2).alias("discharge_datetime"),
-        F.lit(True).alias("inferred_admission"),
-        F.lit(True).alias("inferred_discharge"),
-    )
-    return (
-        intervals.unionByName(inferred)
-        .unionByName(opens)
-        .unionByName(orphan_gaps)
-    )
+    return seq.select(F.inline(F.array_compact(visits)))
 
 
 def occupancy(location_visits: DataFrame, at) -> DataFrame:

@@ -52,3 +52,9 @@ def test_parse_lane_needs_no_sf_dir(monkeypatch):
     # a query lane still insists on a scale-factor dir
     with pytest.raises(SystemExit):
         _parse(["--tree", "../parent", "--lane", "q01_pricing_summary"])
+
+
+def test_locations_lane_needs_no_sf_dir(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_SF_DIR", raising=False)
+    args = _parse(["--tree", "../parent", "--lane", "locations", "--pairs", "3"])
+    assert args.lane == "locations" and args.sf_dir is None and args.pairs == 3

@@ -16,8 +16,10 @@ the variable), or this checkout against another one (a `git clone` or
 Lanes: `adt` times bench.py's 20k and 100k ADT batches, `adt-big` one
 batch of --patients x 4 messages, `collation` the 30-bed waveform lane
 (min of 2), `parse` the materialized HL7 ADT parse of 1,000 generated
-messages (after two warm reps); any registered query name runs it at
---sf-dir (min of 2, warmed on the sibling sf0.001 dir when present).
+messages (after two warm reps), `locations` the materialized location-
+visit inference over 4,000 generated ADT messages (after two warm reps);
+any registered query name runs it at --sf-dir (min of 2, warmed on the
+sibling sf0.001 dir when present).
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ import time
 _REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _RESULT = "AB_RESULT "
 _REP_TIMEOUT_S = 1800
-FIXED_LANES = ("adt", "adt-big", "collation", "parse")
+FIXED_LANES = ("adt", "adt-big", "collation", "parse", "locations")
 
 
 # -- protocol (pure Python) ------------------------------------------------
@@ -119,6 +121,18 @@ def _rep_parse(spark) -> dict[str, float]:
     return {"parse": _timed(lambda: cut(adt_from_hl7(raw)))}
 
 
+def _rep_locations(spark) -> dict[str, float]:
+    """Location-visit inference over a materialized movement history."""
+    from emap_spark.lineage import cut
+    from emap_spark.operators.locations import infer_location_visits
+    from emap_spark.sources.generators import adt_messages
+
+    adt = cut(adt_messages(spark, n_patients=1000))
+    for _ in range(2):
+        cut(infer_location_visits(adt))
+    return {"locations": _timed(lambda: cut(infer_location_visits(adt)))}
+
+
 def _rep_query(spark, args) -> dict[str, float]:
     from emap_spark.registry import queries
 
@@ -145,6 +159,8 @@ def _run_rep(args) -> None:
         secs = _rep_collation(spark)
     elif args.lane == "parse":
         secs = _rep_parse(spark)
+    elif args.lane == "locations":
+        secs = _rep_locations(spark)
     else:
         secs = _rep_query(spark, args)
     print(_RESULT + json.dumps({k: round(v, 3) for k, v in secs.items()}), flush=True)
